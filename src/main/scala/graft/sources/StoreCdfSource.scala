@@ -5,7 +5,6 @@ import java.util
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -356,7 +355,7 @@ final class StoreCdfReaderFactory extends PartitionReaderFactory {
         // executor-side streaming read of one scratch file — O(record)
         // memory, the distributed window never rides the driver
         private val stream = new ParquetIO.GroupFileStream(
-          Paths.get(p.path), None, new Configuration())
+          Paths.get(p.path), None)
         private var cur: org.apache.parquet.example.data.Group = _
         override def next(): Boolean = {
           cur = stream.next()

@@ -499,7 +499,6 @@ final class StoreTailReaderFactory extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[StoreTailInputPartition]
     new PartitionReader[InternalRow] {
-      private val conf = new org.apache.hadoop.conf.Configuration()
       private val physicalHot = TsdbSource.PhysicalOrder
       private val physicalL0 =
         Seq("tag", "partition_start") ++ TsdbSource.PhysicalOrder
@@ -516,7 +515,7 @@ final class StoreTailReaderFactory extends PartitionReaderFactory {
             // outslept — fail loudly (silent skip would hide data loss)
             reader = new graft.tsdb.ParquetIO.GroupFileStream(
               Paths.get(p.nsRoot).resolve(file.rel),
-              Some(if (file.l0) physicalL0 else physicalHot), conf)
+              Some(if (file.l0) physicalL0 else physicalHot))
           }
           cur = reader.next()
           if (cur != null) return true

@@ -519,12 +519,8 @@ final class TsdbScan(
     * from [[graft.tsdb.FooterCache]]: repeat walks over the immutable
     * layout cost two stat calls per file instead of a file open.
     */
-  private def dirRows(p: TsdbInputPartition): Long = {
-    val conf = new Configuration()
-    p.files.iterator
-      .map(f => graft.tsdb.FooterCache.get(f, conf).rows)
-      .sum
-  }
+  private def dirRows(p: TsdbInputPartition): Long =
+    p.files.iterator.map(f => graft.tsdb.FooterCache.get(f).rows).sum
 
   /** Keep only the directories a pushed LIMIT/top-N needs: sort by the
     * directory-encoded sort prefix, accumulate footer row counts until
@@ -821,7 +817,6 @@ final class TsdbAggPartitionReader(p: TsdbInputPartition, spec: TsdbAggSpec,
     counters: TsdbReadCounters = new TsdbReadCounters)
     extends PartitionReader[InternalRow] {
 
-  private val conf = new Configuration()
   private var emitted = false
 
   /** Columns needing min/max; `partition_start` is directory-encoded and
@@ -833,7 +828,7 @@ final class TsdbAggPartitionReader(p: TsdbInputPartition, spec: TsdbAggSpec,
   }.distinct
 
   private def fileStats(file: String): (Long, Map[String, (Long, Long)]) = {
-    val meta = graft.tsdb.FooterCache.get(file, conf,
+    val meta = graft.tsdb.FooterCache.get(file,
       onMiss = () => counters.filesOpened += 1)
     val have = statCols.filter(meta.stats.contains)
       .map(c => c -> meta.stats(c)).toMap
@@ -845,7 +840,7 @@ final class TsdbAggPartitionReader(p: TsdbInputPartition, spec: TsdbAggSpec,
   /** Stats-less fallback: decode only `cols` of this one file. */
   private def rescan(file: String, cols: Seq[String]): Map[String, (Long, Long)] = {
     val reader = new graft.tsdb.ParquetIO.GroupFileStream(
-      Paths.get(file), Some(cols), conf)
+      Paths.get(file), Some(cols))
     counters.filesOpened += 1
     val mins = Array.fill(cols.length)(Long.MaxValue)
     val maxs = Array.fill(cols.length)(Long.MinValue)
@@ -930,7 +925,6 @@ final class TsdbPartitionReader(p: TsdbInputPartition, schema: StructType,
       base :+ "ingestTs"
     else base
   }
-  private val conf = new Configuration()
 
   private val tagU8 = UTF8String.fromString(p.tag)
   private var fileIdx = 0
@@ -942,7 +936,7 @@ final class TsdbPartitionReader(p: TsdbInputPartition, schema: StructType,
       if (reader == null) {
         if (fileIdx >= p.files.length) return false
         reader = new graft.tsdb.ParquetIO.GroupFileStream(
-          Paths.get(p.files(fileIdx)), Some(readCols), conf)
+          Paths.get(p.files(fileIdx)), Some(readCols))
         counters.filesOpened += 1
         fileIdx += 1
       }
@@ -1009,7 +1003,6 @@ final class TsdbL0SnapshotReader(p: TsdbL0SnapshotPartition,
       case _ => true // residuals (ts bounds, IsNotNull) — Spark re-applies
     }
 
-  private val conf = new Configuration()
   private var fileIdx = 0
   private var reader: graft.tsdb.ParquetIO.GroupFileStream = _
   private var current: Group = _
@@ -1019,7 +1012,7 @@ final class TsdbL0SnapshotReader(p: TsdbL0SnapshotPartition,
       if (reader == null) {
         if (fileIdx >= p.files.length) return false
         reader = new graft.tsdb.ParquetIO.GroupFileStream(
-          Paths.get(p.files(fileIdx)), Some(readCols), conf)
+          Paths.get(p.files(fileIdx)), Some(readCols))
         counters.filesOpened += 1
         fileIdx += 1
       }

@@ -6,7 +6,6 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.LocalInputFile
@@ -36,6 +35,14 @@ import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
   * int64 min/max pairs); the LRU bound of 128k entries caps the cache at
   * tens of MB. On a multi-executor cluster each executor warms its own
   * cache — no coordination, correctness from the key alone.
+  *
+  * A miss opens the file through [[ParquetIO.openReader]], like every
+  * engine parquet read: its read options are built per open (the
+  * reader's `close()` releases their codec factory, so they are never
+  * shared) off the JVM-wide, already-loaded [[ParquetIO.readConf]]. The
+  * one-argument `ParquetFileReader.open(InputFile)` would instead build
+  * them over a fresh Hadoop `Configuration` and re-parse
+  * `core-default.xml` on every miss — more than the footer read itself.
   */
 object FooterCache {
 
@@ -84,7 +91,8 @@ object FooterCache {
     * still matches; `onMiss` fires exactly when the footer is physically
     * read (metrics hook).
     */
-  def get(file: String, conf: Configuration, onMiss: () => Unit = NoOp): Meta = {
+  def get(file: String, conf: Configuration = ParquetIO.readConf,
+      onMiss: () => Unit = NoOp): Meta = {
     val k = key(file)
     cache.synchronized(Option(cache.get(k))) match {
       case Some(m) =>
@@ -121,7 +129,7 @@ object FooterCache {
     val in =
       try new LocalInputFile(Paths.get(file))
       catch { case _: Throwable => HadoopInputFile.fromPath(new HPath(file), conf) }
-    val fr = ParquetFileReader.open(in)
+    val fr = ParquetIO.openReader(in)
     try fr.getFooter finally fr.close()
   }
 

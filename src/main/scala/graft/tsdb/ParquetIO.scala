@@ -6,11 +6,14 @@ import scala.collection.mutable
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.parquet.ParquetReadOptions
+import org.apache.parquet.conf.HadoopParquetConfiguration
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
-import org.apache.parquet.hadoop.ParquetReader
+import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
 import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.io.InputFile
 import org.apache.parquet.schema.{MessageType, MessageTypeParser}
 
 /** Direct parquet-java I/O for the store's OLTP-shaped hot paths.
@@ -132,6 +135,34 @@ object ParquetIO {
   def openPartStream(file: JPath, conf: Configuration): PartStreamWriter =
     new PartStreamWriter(file, conf)
 
+  // ------------------------------------------------------ read-open seam
+
+  /** The Hadoop configuration behind every engine parquet read, built and
+    * loaded once per JVM. parquet-java's one-argument
+    * `ParquetFileReader.open(InputFile)` builds its options over a fresh
+    * `Configuration`, whose first lookup re-parses `core-default.xml` from
+    * the jars — on a small-file layout that parse, not the I/O, was most of
+    * a cache-missing point read. Forcing the load here means no open ever
+    * parses it again. Read-only by contract: nothing may `set` on it.
+    */
+  private[tsdb] lazy val readConf: Configuration = {
+    val c = new Configuration()
+    c.size() // forces loadResources now, once
+    c
+  }
+
+  /** The single route by which engine code opens a parquet file for
+    * reading. The options are built FRESH per open (cheap: a few field
+    * reads off the loaded [[readConf]]), never shared:
+    * `ParquetFileReader.close()` releases its options' codec factory, and
+    * a factory hands the same pooled decompressor to every reader that
+    * asks, so one shared options object would let a closing reader
+    * release, and concurrent readers interleave, one decompressor.
+    */
+  def openReader(in: InputFile): ParquetFileReader =
+    ParquetFileReader.open(in,
+      ParquetReadOptions.builder(new HadoopParquetConfiguration(readConf)).build())
+
   /** One decoded sample row: (tag, ts, value, ingestTs, writerId, seq). */
   private type SampleRow = (String, Long, String, Long, String, Long)
 
@@ -221,25 +252,28 @@ object ParquetIO {
   }
 
   /** Pull-style Group reader over one parquet file, through parquet's
-    * page-level API on a [[org.apache.parquet.io.LocalInputFile]] — no
-    * Hadoop FileSystem layer, no `.crc` shadow-file verification reads,
-    * no per-file `Configuration` construction. On a layout of many small
-    * files those three costs ARE the scan (the data pages are a few KB);
-    * on big files the savings amortize away and the bytes dominate, so
-    * this is strictly the small-file-floor fix. The projection is built
-    * from the file's own footer schema, so `required`/`optional`
-    * repetition always matches the file (store lanes legitimately mix
-    * both). The footer parsed for the read is offered to [[FooterCache]]
-    * so later metadata-only walks (top-N row counts, footer aggregates)
-    * never reopen the file. Falls back to the Hadoop `ParquetReader`
-    * stack when the path isn't a local file.
+    * page-level API on a [[org.apache.parquet.io.LocalInputFile]] opened
+    * by [[openReader]] — no Hadoop FileSystem layer, no `.crc`
+    * shadow-file verification reads, and read options built per open off
+    * the JVM-wide, already-loaded [[readConf]] (never a fresh
+    * `Configuration`, whose first lookup re-parses `core-default.xml`).
+    * On a layout of many small files those costs ARE the scan (the data
+    * pages are a few KB); on big files the savings amortize away and the
+    * bytes dominate, so this is strictly the small-file-floor fix. The
+    * projection is built from the file's own footer schema, so
+    * `required`/`optional` repetition always matches the file (store
+    * lanes legitimately mix both). The footer parsed for the read is
+    * offered to [[FooterCache]] so later metadata-only walks (top-N row
+    * counts, footer aggregates) never reopen the file. Falls back to the
+    * Hadoop `ParquetReader` stack when the path isn't a local file.
     *
     * @param cols projected column names; None = the file's full schema
+    * @param conf configuration of the Hadoop fallback only; the local
+    *             open always reads [[readConf]]
     */
   final class GroupFileStream(file: JPath, cols: Option[Seq[String]],
-      conf: Configuration) {
+      conf: Configuration = readConf) {
     import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
-    import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.io.{ColumnIOFactory, MessageColumnIO, RecordReader}
 
     private var low: ParquetFileReader = _
@@ -250,8 +284,7 @@ object ParquetIO {
     private var left = 0L
 
     try {
-      low = ParquetFileReader.open(
-        new org.apache.parquet.io.LocalInputFile(file))
+      low = openReader(new org.apache.parquet.io.LocalInputFile(file))
       val footer = low.getFooter
       FooterCache.offer(file.toString, footer)
       val fileSchema = footer.getFileMetaData.getSchema

@@ -1798,35 +1798,49 @@ final class TimeSeriesStore(
     * listings and full-file filters were burying (~3-5 k/s before;
     * ≥ 20 k/s single-thread is the bench gate).
     */
-  @volatile private var servingKey: (Long, String) = null
-  @volatile private var servingPending: Set[Path] = Set.empty
-  @volatile private var servingL0: Seq[(Path, Long)] = Seq.empty
-  private val servingTags = scala.collection.concurrent.TrieMap
-    .empty[String, IndexedSeq[(Long, Seq[(Path, Long)])]]
+  private final class Serving(val key: (Long, String), val pending: Set[Path],
+      val l0: Seq[(Path, Long)]) {
+    val tags = scala.collection.concurrent.TrieMap
+      .empty[String, IndexedSeq[(Long, Seq[(Path, Long)])]]
+  }
+
+  /** One listing generation: a read takes it once and resolves every
+    * candidate through it, and a refresh replaces it whole. A per-tag
+    * listing that a slow reader builds from an older disk state thus
+    * lands in the generation it began under, never in a newer one
+    * whose L0 listing already lacks the flushed files.
+    */
+  @volatile private var serving: Serving = null
   private val servingLock = new Object
 
-  private def refreshServing(): Unit = {
+  /** The serving listing of the current store state; `relist` builds a
+    * new one even when the key has not moved (a file it named vanished).
+    */
+  private def currentServing(relist: Boolean): Serving = {
     val key = (storeVersion.get(), diskStamp())
-    if (servingKey == key) return
+    val cur = serving
+    if (!relist && cur != null && cur.key == key) return cur
     servingLock.synchronized {
-      if (servingKey == key) return
-      val pending = pendingObsolete()
-      val l0 = l0FileList().filter(f =>
-        !pending.contains(f.toAbsolutePath.normalize))
-        .map(f => (f, sizeOrZero(f)))
-      servingTags.clear()
-      servingPending = pending
-      servingL0 = l0
-      servingKey = key
+      val again = serving
+      if (!relist && again != null && again.key == key) again
+      else {
+        val pending = pendingObsolete()
+        val l0 = l0FileList().filter(f =>
+          !pending.contains(f.toAbsolutePath.normalize))
+          .map(f => (f, sizeOrZero(f)))
+        val next = new Serving(key, pending, l0)
+        serving = next
+        next
+      }
     }
   }
 
   /** A tag's partition directories across BOTH tiers, with live files
     * and their sizes — built on first read of the tag per store state.
     */
-  private def tagCandidates(tag: String): IndexedSeq[(Long, Seq[(Path, Long)])] =
-    servingTags.getOrElseUpdate(tag, {
-      val pending = servingPending
+  private def tagCandidates(sv: Serving, tag: String): IndexedSeq[(Long, Seq[(Path, Long)])] =
+    sv.tags.getOrElseUpdate(tag, {
+      val pending = sv.pending
       val out = scala.collection.mutable.ArrayBuffer
         .empty[(Long, Seq[(Path, Long)])]
       Seq(hotDir, coldDir).foreach { tier =>
@@ -1846,9 +1860,23 @@ final class TimeSeriesStore(
       out.toIndexedSeq
     })
 
+  /** Test seam: runs once per fast-path attempt, after the candidate
+    * listing resolved and before any candidate file is opened — lets a
+    * spec land a flush exactly inside a read.
+    */
+  @volatile private[graft] var fastReadListed: () => Unit = () => ()
+
   /** Driver-side pruned merge read; None when the candidate set is too
-    * large for the fast path (or on any IO race with a concurrent flush —
-    * the Spark path is the always-correct fallback).
+    * large for the fast path (or when an IO race with a concurrent
+    * flush/compaction outlives one retry — the Spark path is the
+    * always-correct fallback).
+    *
+    * With `obsoleteGraceMs = 0` a flush deletes the L0 files it merged
+    * at once, so a read holding the serving listing from before the
+    * flush can open a vanished file. The rows live on in the files the
+    * flush published first, so the remedy is a fresh listing: re-list
+    * and run the fast path once more before giving up to Spark (whose
+    * own stale-snapshot retry may race the next flush).
     *
     * Ledger-pending files are excluded for the same reason nonEmptyTier
     * excludes them from fresh listings — and, since delete() exists, for
@@ -1857,22 +1885,24 @@ final class TimeSeriesStore(
     * would resurrect forgotten data (compaction's old∪new was
     * LWW-equivalent; a delete's is not).
     */
-  private def fastRead(ranges: Map[String, (Long, Long)]): Option[Map[String, SortedMap[Long, String]]] =
+  private def fastRead(ranges: Map[String, (Long, Long)],
+      relist: Boolean = false): Option[Map[String, SortedMap[Long, String]]] =
     try {
-      refreshServing()
+      val sv = currentServing(relist)
       // upstream-first (L0 → hot → cold), same reasoning as `tiers`: a
       // concurrent foreign flush/ack can only DOUBLE a migrating row's
       // candidacy (the LWW fold collapses it), never hide it
-      val l0Cand = servingL0.filter { case (f, _) => l0MayMatch(f, ranges) }
+      val l0Cand = sv.l0.filter { case (f, _) => l0MayMatch(f, ranges) }
       val tagCand = ranges.toSeq.map { case (tag, (s, e)) =>
         val lo = partitionStartOf(s)
         val hi = partitionStartOf(e)
-        (tag, s, e, tagCandidates(tag).filter(p => p._1 >= lo && p._1 <= hi))
+        (tag, s, e, tagCandidates(sv, tag).filter(p => p._1 >= lo && p._1 <= hi))
       }
       val bytes = l0Cand.iterator.map(_._2).sum +
         tagCand.iterator.flatMap(_._4.iterator.flatMap(_._2.iterator.map(_._2))).sum
       if (bytes > Limits.fastPathMaxBytes) None
       else {
+        fastReadListed()
         val out = Map.newBuilder[String, SortedMap[Long, String]]
         tagCand.foreach { case (tag, s, e, parts) =>
           val acc = scala.collection.mutable
@@ -1890,7 +1920,9 @@ final class TimeSeriesStore(
         }
         Some(out.result())
       }
-    } catch { case _: java.io.IOException => None }
+    } catch {
+      case _: java.io.IOException => if (relist) None else fastRead(ranges, relist = true)
+    }
 
   private def validateRanges(ranges: Map[String, (Long, Long)]): Unit = {
     if (ranges.size > MaxTagsPerRead)
