@@ -1173,12 +1173,6 @@ final class TsdbWrite(
       (tag, ps, es.map(_.maxIngestTs).max)
     }
     if (acts.nonEmpty) {
-      def js(s: String): String = "\"" + s.flatMap {
-        case '"'  => "\\\""
-        case '\\' => "\\\\"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      } + "\""
       val sb = new StringBuilder
       // pmax = running activityTs max within this (write-once) file —
       // the change planner's backward-scan stop bound, so a cold plan
@@ -1186,9 +1180,8 @@ final class TsdbWrite(
       var pmax = Long.MinValue
       acts.foreach { case (tag, ps, actTs) =>
         if (actTs > pmax) pmax = actTs
-        val pName = tag + graft.tsdb.Limits.Separator + ps
-        sb.append(s"""{"partitionName":${js(pName)},"tag":${js(tag)},""")
-          .append(s""""partitionStart":$ps,"activityTs":$actTs,"kind":${js("w")},"pmax":$pmax}""")
+        sb.append(graft.tsdb.ActivityLedger.encodeLine(
+          graft.tsdb.ActivityLedger.Act(tag, ps, actTs, "w", pmax = Some(pmax))))
           .append('\n')
       }
       val actDir = Paths.get(nsRoot, "activity")

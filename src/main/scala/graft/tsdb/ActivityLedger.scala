@@ -69,7 +69,18 @@ object ActivityLedger {
       b.toString
     }
 
-  private def longField(line: String, name: String): Option[Long] = {
+  /** `s` as a JSON string literal: quotes, backslashes and control
+    * characters escaped — the form the field readers below decode.
+    */
+  def quote(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
+  /** The value of the numeric field `name` in a flat JSON object. */
+  private[graft] def longField(line: String, name: String): Option[Long] = {
     val k = "\"" + name + "\":"
     val i = line.indexOf(k)
     if (i < 0) return None
@@ -80,7 +91,8 @@ object ActivityLedger {
     if (j == start) None else Some(line.substring(start, j).toLong)
   }
 
-  private def strField(line: String, name: String): Option[String] = {
+  /** The value of the string field `name` in a flat JSON object. */
+  private[graft] def strField(line: String, name: String): Option[String] = {
     val k = "\"" + name + "\":\""
     val i = line.indexOf(k)
     if (i < 0) return None
@@ -93,6 +105,23 @@ object ActivityLedger {
       else { b.append(c); j += 1 }
     }
     None
+  }
+
+  /** One ledger line (no trailing newline) — the inverse of [[parseLine]].
+    * Every writer lane encodes through here, so the field order is one:
+    * `partitionName, tag, partitionStart, activityTs, [amin,] kind, [pmax]`.
+    */
+  def encodeLine(a: Act): String = {
+    val b = new StringBuilder(128)
+    b.append("{\"partitionName\":")
+      .append(quote(a.tag + Limits.Separator + a.partitionStart))
+      .append(",\"tag\":").append(quote(a.tag))
+      .append(",\"partitionStart\":").append(a.partitionStart)
+      .append(",\"activityTs\":").append(a.activityTs)
+    a.amin.foreach(m => b.append(",\"amin\":").append(m))
+    b.append(",\"kind\":").append(quote(a.kind))
+    a.pmax.foreach(m => b.append(",\"pmax\":").append(m))
+    b.append('}').toString
   }
 
   /** Parse one ledger line; None for malformed/blank lines. */

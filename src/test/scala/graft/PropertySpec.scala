@@ -7,10 +7,10 @@ import scala.collection.immutable.SortedMap
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
-import org.scalacheck.Gen
+import org.scalacheck.{Arbitrary, Gen}
 import org.scalacheck.rng.Seed
 
-import graft.tsdb.{StoreSettings, TimeSeriesStore}
+import graft.tsdb.{ActivityLedger, StoreSettings, TimeSeriesStore}
 
 /** Property-based invariants the reference's example-driven suite never
   * states (SURVEY.md §5): write→read inversion under arbitrary batches,
@@ -81,6 +81,24 @@ class PropertySpec extends AnyFunSuite with BeforeAndAfterAll {
         val want = model.collect { case (t, m) if m.nonEmpty => t -> SortedMap(m.toSeq: _*) }
         assert(got === want)
       }
+    }
+  }
+
+  test("property: an activity line round-trips through encodeLine and parseLine") {
+    val genStr = Gen.listOf(Gen.oneOf('"', '\\', '\n', '\t', '\u0000', '\u001f', ',', '}',
+      '{', ':', '-', 'a', '\u00e9', '\u2028')).map(_.mkString)
+    val genAct = for {
+      tag <- genStr
+      kind <- genStr
+      ps <- Arbitrary.arbitrary[Long]
+      at <- Arbitrary.arbitrary[Long]
+      pmax <- Gen.option(Arbitrary.arbitrary[Long])
+      amin <- Gen.option(Arbitrary.arbitrary[Long])
+    } yield ActivityLedger.Act(tag, ps, at, kind, pmax, amin)
+    forAllSeeded(genAct, n = 200) { a =>
+      val line = ActivityLedger.encodeLine(a)
+      assert(!line.exists(_ < ' '), line)
+      assert(ActivityLedger.parseLine(line) === Some(a), line)
     }
   }
 
