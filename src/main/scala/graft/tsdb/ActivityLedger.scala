@@ -26,10 +26,10 @@ import scala.jdk.CollectionConverters._
   *    reads O(churned lines + one chunk per writer), not O(partitions
   *    ever touched) — flat in store size, linear in churn
   *    (ChangeFeedProbe measures it at 100k+ partitions).
-  *  - [[readAppended]] is the forward twin for the store TAILER: it
-  *    consumes only the BYTES appended since the caller's last offsets,
-  *    returning the partitions whose activity advanced — so a
-  *    steady-ingest trigger lists exactly the touched directories.
+  *  - [[tail]] is the forward twin: it consumes only the complete lines
+  *    appended since the caller's last offsets. The store TAILER
+  *    ([[readAppended]]) takes the partitions whose activity advanced;
+  *    the store's [[RecentActivity]] index takes every write and mark.
   *
   * Lines written before the `pmax` field existed parse fine; a file
   * containing any such line just can't early-stop below it (the scan
@@ -291,25 +291,26 @@ object ActivityLedger {
     } finally ch.close()
   }
 
-  /** Forward incremental read for the store tailer: the `"w"`-touched
-    * partitions in the bytes appended past `offsets` (file name → bytes
-    * already consumed), plus the new offsets. A file that SHRANK
-    * (activity-log compaction) is re-read whole — the compacted content
-    * still names every partition the dropped lines named, so nothing is
-    * missed and the re-listing is merely redundant.
+  /** Forward incremental read: every act in the COMPLETE lines appended
+    * past `offsets` (file name → bytes already consumed), plus the new
+    * offsets. An offset only ever advances through the last `'\n'` read,
+    * so a line still being appended (a large `Files.write` reaches the
+    * file as several `write` calls) is read whole by a later call, never
+    * skipped as malformed. A file that SHRANK (a legacy in-place log
+    * compaction) is re-read whole; a vanished file's offset is dropped
+    * (a rolled log never reuses its name).
     */
-  def readAppended(activityDir: Path, offsets: Map[String, Long])
-      : (Map[String, Long], Set[(String, Long)]) = {
-    val touched = scala.collection.mutable.HashSet.empty[(String, Long)]
+  def tail(activityDir: Path, offsets: Map[String, Long])
+      : (Map[String, Long], Seq[Act]) = {
+    val acts = scala.collection.mutable.ArrayBuffer.empty[Act]
     val next = scala.collection.mutable.Map.empty[String, Long]
     ledgerFiles(activityDir).foreach { f =>
       val name = f.getFileName.toString
+      val prev = offsets.getOrElse(name, 0L)
+      next(name) = prev
       try {
         val size = Files.size(f)
-        val from = offsets.getOrElse(name, 0L) match {
-          case o if o > size => 0L // compacted below our cursor: re-read
-          case o => o
-        }
+        val from = if (prev > size) 0L else prev // compacted below our cursor
         if (size > from) {
           val ch = FileChannel.open(f, StandardOpenOption.READ)
           try {
@@ -320,20 +321,28 @@ object ActivityLedger {
               if (r < 0) throw new java.io.IOException(s"short read of $f")
               off += r
             }
-            // resync to the first line boundary when starting mid-file
-            // after a compaction reset (offsets from append time are
-            // always boundaries; only the reset case needs it)
-            val text = new String(buf.array(), StandardCharsets.UTF_8)
-            text.split('\n').foreach { line =>
-              if (line.nonEmpty) parseLine(line).foreach { a =>
-                if (a.kind == "w") { touched += ((a.tag, a.partitionStart)); () }
+            // '\n' never occurs inside a multi-byte UTF-8 sequence
+            val end = buf.array().lastIndexOf('\n'.toByte) + 1
+            new String(buf.array(), 0, end, StandardCharsets.UTF_8)
+              .split('\n').foreach { line =>
+                if (line.nonEmpty) parseLine(line).foreach(acts += _)
               }
-            }
+            next(name) = from + end
           } finally ch.close()
         }
-        next(name) = size
       } catch { case _: java.io.IOException => () }
     }
-    (offsets ++ next, touched.toSet)
+    (next.toMap, acts.toSeq)
+  }
+
+  /** [[tail]] for the store TAILER: the `"w"`-touched partitions in the
+    * complete lines appended past `offsets`, plus the new offsets — so a
+    * steady-ingest trigger lists exactly the touched directories.
+    */
+  def readAppended(activityDir: Path, offsets: Map[String, Long])
+      : (Map[String, Long], Set[(String, Long)]) = {
+    val (next, acts) = tail(activityDir, offsets)
+    (next, acts.iterator.filter(_.kind == "w")
+      .map(a => (a.tag, a.partitionStart)).toSet)
   }
 }

@@ -230,11 +230,14 @@ object ParquetIO {
   /** Driver-side scan of one sample file (L0 or partition-dir).
     * `dirTag` supplies the directory-encoded `tag` for Hive-tier files
     * (which don't store it physically); the callback receives every row,
-    * served from the block cache when possible.
+    * served from the block cache when possible — or, with `cached = false`
+    * (a file about to retire), decoded straight from disk and not cached.
     */
-  def foreachSample(file: JPath, dirTag: Option[String], conf: Configuration)(
+  def foreachSample(file: JPath, dirTag: Option[String], conf: Configuration,
+      cached: Boolean = true)(
       f: (String, Long, String, Long, String, Long) => Unit): Unit =
-    cachedRows(file, dirTag, conf)
+    if (!cached) foreachSampleUncached(file, dirTag, conf)(f)
+    else cachedRows(file, dirTag, conf)
       .foreach(r => f(r._1, r._2, r._3, r._4, r._5, r._6))
 
   private def foreachSampleUncached(file: JPath, dirTag: Option[String], conf: Configuration)(
@@ -413,16 +416,18 @@ object ParquetIO {
   /** Merge rows from candidate files with last-write-wins resolution:
     * for each requested (tag, [start, end]) keep, per ts, the row with the
     * greatest (ingestTs, seq, writerId) — identical semantics to
-    * [[TimeSeriesStore.lwwDedup]], executed driver-side.
+    * [[TimeSeriesStore.lwwDedup]], executed driver-side. `cached` as in
+    * [[foreachSample]].
     */
   def mergeRead(
       files: Seq[(JPath, Option[String])],
       ranges: Map[String, (Long, Long)],
-      conf: Configuration): Map[String, mutable.Map[Long, (String, Long, Long, String)]] = {
+      conf: Configuration,
+      cached: Boolean = true): Map[String, mutable.Map[Long, (String, Long, Long, String)]] = {
     val lwwOrd = Ordering.Tuple3(Ordering.Long, Ordering.Long, Ordering.String)
     val acc = mutable.Map.empty[String, mutable.Map[Long, (String, Long, Long, String)]]
     files.foreach { case (file, dirTag) =>
-      foreachSample(file, dirTag, conf) { (tag, ts, value, ingestTs, writerId, seq) =>
+      foreachSample(file, dirTag, conf, cached) { (tag, ts, value, ingestTs, writerId, seq) =>
         ranges.get(tag) match {
           case Some((s, e)) if ts >= s && ts <= e =>
             val perTag = acc.getOrElseUpdate(tag, mutable.Map.empty)

@@ -281,13 +281,6 @@ final class TimeSeriesStore(
   private val dataFileSchema = StructType(
     sampleSchema.filterNot(f => f.name == "tag"))
 
-  private val activitySchema = StructType(Seq(
-    StructField("partitionName", StringType, nullable = false),
-    StructField("tag", StringType, nullable = false),
-    StructField("partitionStart", LongType, nullable = false),
-    StructField("activityTs", LongType, nullable = false),
-    StructField("kind", StringType, nullable = false))) // "w" write | "m" marked
-
   // ---------------------------------------------------------- initialize
 
   /** Bootstrap the store (reference index.js:46-62). Write-once semantics via
@@ -549,14 +542,24 @@ final class TimeSeriesStore(
         !pending.contains(p.toAbsolutePath.normalize)).toSeq)
     }
 
-  /** The dir's data files minus any awaiting GC retirement — what every
-    * maintenance operation must treat as the partition's live content.
+  /** The dir's data files minus any awaiting GC retirement (`pending`,
+    * read once per operation) — what every maintenance operation must
+    * treat as the partition's live content.
     */
-  private def liveParquetFiles(dir: Path): Seq[Path] = {
-    val pending = pendingObsolete()
+  private def liveParquetFiles(dir: Path, pending: Set[Path]): Seq[Path] =
     withList(dir)(_.filter(p => p.getFileName.toString.endsWith(".parquet") &&
       !pending.contains(p.toAbsolutePath.normalize)).toSeq)
-  }
+
+  /** Every hot partition directory with its live data files, from ONE
+    * walk of `hot/` (depth 3: `tag=…/partition_start=…/file`). A directory
+    * without a live data file is absent.
+    */
+  private def hotPartitionFiles(pending: Set[Path]): Seq[(Path, Seq[Path])] =
+    withWalk(hotDir, 3)(_.filter { p =>
+      p.getFileName.toString.endsWith(".parquet") &&
+        p.getParent.getFileName.toString.startsWith("partition_start=") &&
+        !pending.contains(p.toAbsolutePath.normalize)
+    }.toSeq).groupBy(_.getParent).toSeq
 
   /** In-memory L0 manifest: file name → (minTs, maxTs, tags). Known at
     * write time for our own files; lets the point-read fast path skip L0
@@ -2028,35 +2031,32 @@ final class TimeSeriesStore(
 
   // --------------------------------------------------------------- purge
 
-  /** Activity log view with the reference's RecentActivity semantics
-    * (index.js:81, enqueue-purge.lua): a partition is "in the set" iff it has
-    * a write newer than its last purge-mark; its activity time is its last
-    * write time.
+  /** The reference's RecentActivity set (index.js:81, enqueue-purge.lua)
+    * per partition, as a DataFrame: a partition is in the set iff it has a
+    * write newer than its last purge-mark; its activity time is its last
+    * write time. A local view over the store's [[RecentActivity]] index,
+    * refreshed from every writer's ledger first — no Spark job reads the
+    * log. Columns: `partitionName, tag, partitionStart, lastActivity`.
     */
   def recentActivityDF: DataFrame = {
-    val hasLog = Files.exists(activityDir) &&
-      withWalk(activityDir)(_.exists(p =>
-        Files.isRegularFile(p) && p.getFileName.toString.endsWith(".jsonl")))
-    if (!hasLog)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(
-          StructField("partitionName", StringType), StructField("tag", StringType),
-          StructField("partitionStart", LongType), StructField("lastActivity", LongType))))
-    val log = spark.read.schema(activitySchema).json(activityDir.toString)
-    log.groupBy(col("partitionName"), col("tag"), col("partitionStart"))
-      .agg(
-        max(when(col("kind") === "w", col("activityTs"))).as("lastWrite"),
-        max(when(col("kind") === "m", col("activityTs"))).as("lastMark"))
-      .where(col("lastWrite").isNotNull &&
-        (col("lastMark").isNull || col("lastWrite") > col("lastMark")))
-      .select(col("partitionName"), col("tag"), col("partitionStart"),
-        col("lastWrite").as("lastActivity"))
+    recentActivity.refresh()
+    spark.createDataFrame(
+      recentActivity.active().map(e => org.apache.spark.sql.Row(
+        e.partitionName, e.tag, e.partitionStart, e.lastActivity)).asJava,
+      StructType(Seq(
+        StructField("partitionName", StringType), StructField("tag", StringType),
+        StructField("partitionStart", LongType), StructField("lastActivity", LongType))))
   }
 
+  /** RecentActivity index behind [[purgeScan]] and [[recentActivityDF]]:
+    * empty until the first of those calls tails the ledger (never fed by
+    * the write path).
+    */
+  private val recentActivity = new RecentActivity(activityDir)
+
   /** Compact THIS writer's activity log to its net state: per
-    * (partitionName, kind) only the max activityTs matters to
-    * [[recentActivityDF]]'s aggregate, so the log rewrites to at most two
+    * (partitionName, kind) only the max activityTs matters to the
+    * [[RecentActivity]] index, so the log rewrites to at most two
     * lines per partition ever touched — bounding metadata growth for
     * long-lived writers. Other writers' logs are never touched (each file
     * has exactly one appender).
@@ -2070,7 +2070,7 @@ final class TimeSeriesStore(
     val lines = Files.readAllLines(f, StandardCharsets.UTF_8).asScala.filter(_.nonEmpty)
     val parsed = lines.flatMap(ActivityLedger.parseLine)
     // per (tag, partitionStart, kind) only the max activityTs matters to
-    // recentActivityDF's aggregate — and to the change planner's
+    // the RecentActivity index — and to the change planner's
     // "activity > fromMs" predicate. The merged line's `amin` must be the
     // MIN over every merged line (a missing legacy amin poisons the merge
     // to None — unbounded below): the bracket prunes an upper-bounded
@@ -2123,8 +2123,14 @@ final class TimeSeriesStore(
     * (lua:19; idempotence per consumer-test.js:898-934). Data stays readable
     * until [[purgeAck]] (consumer-test.js:925-933).
     *
-    * The candidate scan is a top-K plan (`orderBy(lastActivity).limit(K)` →
-    * TakeOrderedAndProject); snapshots are per-partition pruned scans.
+    * Victims come from the store's in-memory [[RecentActivity]] index:
+    * inside the lease and after the L0 flush it tails every writer's
+    * ledger (so another process's marks count), then a bounded heap takes
+    * the K oldest by `(lastActivity, partitionName)`, names compared as
+    * UTF-8 bytes like Spark's string order — the reference's one
+    * score-ordered read of a sorted set, costing O(index) in memory, no
+    * Spark job. Snapshots are plain file copies plus a driver-side stats
+    * scan of each victim's live files.
     *
     * '''Deliberate unit deviation from the reference''': here
     * `partitionAgeThreshold` is SECONDS of partition age (300 → 5 minutes).
@@ -2152,17 +2158,14 @@ final class TimeSeriesStore(
     // partitioned tier only — rows written after this point land in new L0
     // files and survive the ack untouched (consumer-test.js:936-989).
     flushL0()
+    recentActivity.refresh()
     val now = clock()
-    val victims = recentActivityDF
-      .where(lit(now) - col("lastActivity") >= partitionAgeThreshold * 1000L)
-      .orderBy(col("lastActivity"), col("partitionName"))
-      .limit(maxPartitionsToMark)
-      .collect()
+    val victims = recentActivity.oldest(now, partitionAgeThreshold * 1000L,
+      maxPartitionsToMark)
     val markTs = clock()
-    victims.toIndexedSeq.map { row =>
-      val pName = row.getString(0)
-      val tag = row.getString(1)
-      val pStart = row.getLong(2)
+    val pending = pendingObsolete()
+    victims.map { v =>
+      val (pName, tag, pStart) = (v.partitionName, v.tag, v.partitionStart)
       val id = s"$markTs-${purgeIdCounter.getAndIncrement()}"
       val entryDir = queueDir.resolve(id)
       val snapDir = entryDir.resolve("snapshot")
@@ -2177,7 +2180,7 @@ final class TimeSeriesStore(
       var maxIngest = -1L
       // live files only: a ledger-pending file's members are duplicated
       // in its replacement — snapshotting both would double the set
-      if (Files.exists(partDir)) liveParquetFiles(partDir)
+      if (Files.exists(partDir)) liveParquetFiles(partDir, pending)
         .foreach { f =>
           Files.copy(f, snapDir.resolve(f.getFileName.toString))
           ParquetIO.foreachSample(f, Some(tag), hadoopConf) { (_, _, _, ingestTs, _, seq) =>
@@ -2265,13 +2268,13 @@ final class TimeSeriesStore(
     // cold layout == hot layout: archive = copy the snapshot's immutable
     // parquet files into the cold partition dir (id-prefixed names keep
     // different archives apart; re-archiving an id replaces its copies).
-    // The copies are staged: coldDF in any process may list the dir.
-    publish(coldDir, s"arch-$id-") { stage =>
-      val dst = Files.createDirectories(stage.resolve(tagDirName(m.tag))
-        .resolve(s"partition_start=${m.partitionStart}"))
+    // The copies are staged flat and published straight into the
+    // partition dir: coldDF in any process may list it.
+    publish(coldDir.resolve(tagDirName(m.tag)).resolve(s"partition_start=${m.partitionStart}"),
+        s"arch-$id-") { stage =>
       withList(entryDir.resolve("snapshot"))(_
         .filter(_.getFileName.toString.endsWith(".parquet"))
-        .foreach(f => Files.copy(f, dst.resolve(f.getFileName.toString))))
+        .foreach(f => Files.copy(f, stage.resolve(f.getFileName.toString))))
     }
     bumpVersion()
   }
@@ -2346,21 +2349,21 @@ final class TimeSeriesStore(
       return 0
     val m = readMeta(purgeId).get
     val tag = m.tag
-    val partRel = Paths.get(tagDirName(tag), s"partition_start=${m.partitionStart}")
-    val partDir = hotDir.resolve(partRel)
+    val partDir = hotDir.resolve(tagDirName(tag)).resolve(s"partition_start=${m.partitionStart}")
     if (Files.exists(partDir)) {
       // Anti-"join" on the snapshot's exact member set (writerId, seq) —
       // the rendering of lua's per-member ZREM (ack-purge.lua:13-18).
       // Partitions are partition-sized by design, so the default path is a
       // driver-side set-difference + atomic rewrite; an oversized hot spot
       // falls back to the distributed anti-join.
-      val partFiles = liveParquetFiles(partDir)
+      val partFiles = liveParquetFiles(partDir, pendingObsolete())
       val partBytes = partFiles.map(Files.size(_)).sum
-      // The survivors' file lands NEXT TO the old members, then the old
-      // files retire; with no survivor nothing is staged and they just
-      // retire (grace 0 prunes the dir now — the ack-purge.lua:21-23
-      // index cleanup — else the sweep prunes it when the grace passes).
-      publish(hotDir, RewritePrefix, partFiles) { stage =>
+      // The survivors' file, staged flat, lands NEXT TO the old members,
+      // then the old files retire; with no survivor nothing is staged and
+      // they just retire (grace 0 prunes the dir now — the
+      // ack-purge.lua:21-23 index cleanup — else the sweep prunes it when
+      // the grace passes).
+      publish(partDir, RewritePrefix, partFiles) { stage =>
       if (partBytes <= directFlushMaxBytes) {
         val snapped = scala.collection.mutable.HashSet.empty[(String, Long)]
         withList(entryDir.resolve("snapshot"))(_
@@ -2377,11 +2380,9 @@ final class TimeSeriesStore(
             if (!snapped.contains((wId, seq))) remaining += ((ts, v, ingestTs, wId, seq))
           }
         }
-        if (remaining.nonEmpty) {
-          val dir = Files.createDirectories(stage.resolve(partRel))
-          ParquetIO.writePartFile(dir.resolve(s"part-ack-$purgeId.parquet"),
+        if (remaining.nonEmpty)
+          ParquetIO.writePartFile(stage.resolve(s"part-ack-$purgeId.parquet"),
             remaining.toSeq, hadoopConf)
-        }
       } else {
         val snap = spark.read.schema(dataFileSchema)
           .parquet(entryDir.resolve("snapshot").toString)
@@ -2397,7 +2398,7 @@ final class TimeSeriesStore(
         // dir; compact() merges later). coalesce(1) here would funnel
         // the one partition that is too big through one task.
         if (remaining.count() > 0)
-          remaining.write.mode("overwrite").parquet(stage.resolve(partRel).toString)
+          remaining.write.mode("append").parquet(stage.toString)
       }
       }
     }
@@ -2422,6 +2423,13 @@ final class TimeSeriesStore(
     * members, exactly what an LSM level-merge does). Reads are unchanged
     * either way because read-side LWW dedup is idempotent.
     *
+    * Candidates come from one walk of `hot/` (partitions with at least
+    * `minFiles` live files). Like [[flushL0]], the rewrite has two
+    * branches with identical output layout: when the eligible bytes are at
+    * most `directFlushMaxBytes` and `zorder` is off, each partition merges
+    * driver-side into one file on a small pool — no Spark job; otherwise
+    * ONE Spark job rewrites every eligible partition.
+    *
     * With `zorder = true` the rewrite is additionally a LAYOUT job — the
     * store-integrated `OPTIMIZE … ZORDER BY (tag, ts)` (VERDICT r12 next
     * #5): each surviving row gets the [[graft.analytics.Layout.zorderKey]]
@@ -2444,9 +2452,10 @@ final class TimeSeriesStore(
     * them). The helper columns are dropped before the write — compaction
     * must stay a drop-in, schema-identical layout swap (ADVICE r12).
     *
-    * Scale shape: identical to the plain rewrite — one shuffle keyed on
-    * the layout plus a per-task sort; the file roll adds no pass. At
-    * 100 TB this is the Delta/Iceberg OPTIMIZE data path run tier-wide.
+    * Scale shape of the Spark branch: identical to the plain rewrite — one
+    * shuffle keyed on the layout plus a per-task sort; the file roll adds
+    * no pass. At 100 TB this is the Delta/Iceberg OPTIMIZE data path run
+    * tier-wide.
     *
     * @param minFiles only partitions with at least this many data files
     * @param applyLww merge superseded members away (true = real LSM merge)
@@ -2463,20 +2472,78 @@ final class TimeSeriesStore(
     maintenanceLease.withLease {
     gcSweep() // retire grace-expired files before re-listing partitions
     flushL0() // compaction operates on the partitioned tier
-    if (!Files.exists(hotDir)) return 0
-    val partDirs = withWalk(hotDir, 2)(_
-      .filter(p => Files.isDirectory(p) &&
-        p.getFileName.toString.startsWith("partition_start="))
-      .toSeq)
-    // Eligibility is a metadata listing (O(partitions), driver-side); the
-    // DATA rewrite below is ONE Spark job over every eligible partition —
-    // not a driver loop of per-directory jobs, which would cost
-    // O(partitions) scheduling rounds at scale. Only LIVE files count and
-    // are read — a ledger-pending file's rows are already in its
-    // partition's replacement files.
-    val eligible = partDirs.map(d => d -> liveParquetFiles(d))
-      .filter(_._2.size >= minFiles)
+    // Eligibility is a metadata listing: one walk of hot/ with the GC
+    // ledger read once. Only LIVE files count and are read — a
+    // ledger-pending file's rows are already in its partition's
+    // replacement files.
+    val eligible = hotPartitionFiles(pendingObsolete()).filter(_._2.size >= minFiles)
     if (eligible.isEmpty) return 0
+    val files = eligible.flatMap(_._2)
+    // Publish-then-retire (output names are write-unique). LWW can never
+    // empty a partition (≥1 member per ts survives), so every eligible dir
+    // with rows has a rewritten counterpart and all its old files retire.
+    val n = publish(hotDir, RewritePrefix, files) { stage =>
+      if (!zorder && files.map(sizeOrZero).sum <= directFlushMaxBytes)
+        compactLocal(eligible, applyLww, stage)
+      else compactSpark(files, applyLww, zorder, zorderRowsPerFile, stage)
+      eligible.count { case (dir, _) => Files.exists(stage.resolve(hotDir.relativize(dir))) }
+    }
+    partSizesFresh = false // partitions were rewritten
+    bumpVersion()
+    n
+    }
+  }
+
+  /** [[compact]]'s small branch, the twin of [[flushL0]]'s: a Spark
+    * rewrite of a few MB costs seconds of scheduling and a shuffle, so each
+    * eligible partition is merged driver-side on a small pool — its live
+    * files read (bypassing the block cache: they retire next),
+    * LWW-merged with [[ParquetIO.mergeRead]]'s ordering or passed through,
+    * and written as one `part-<staging>.parquet` into the staging mirror
+    * of its directory.
+    */
+  private def compactLocal(eligible: Seq[(Path, Seq[Path])], applyLww: Boolean,
+      stage: Path): Unit = {
+    val name = s"part-${stage.getFileName}.parquet"
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(
+      math.min(8, Runtime.getRuntime.availableProcessors()))
+    try eligible.map { case (dir, files) =>
+      pool.submit(new Runnable {
+        override def run(): Unit = {
+          val tag = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+            .unescapePathName(dir.getParent.getFileName.toString.stripPrefix("tag="))
+          val in = files.map(f => (f, Some(tag)))
+          val rows: Seq[(Long, String, Long, String, Long)] =
+            if (applyLww)
+              ParquetIO.mergeRead(in, Map(tag -> (Long.MinValue, Long.MaxValue)),
+                hadoopConf, cached = false)
+                .get(tag).toSeq.flatMap(_.toSeq.sortBy(_._1))
+                .map { case (ts, (v, ingestTs, seq, wId)) => (ts, v, ingestTs, wId, seq) }
+            else {
+              val all = scala.collection.mutable.ArrayBuffer
+                .empty[(Long, String, Long, String, Long)]
+              files.foreach(f => ParquetIO.foreachSample(f, Some(tag), hadoopConf,
+                cached = false) { (_, ts, v, ingestTs, wId, seq) =>
+                all += ((ts, v, ingestTs, wId, seq)); ()
+              })
+              all.toSeq
+            }
+          if (rows.nonEmpty) {
+            val out = Files.createDirectories(stage.resolve(hotDir.relativize(dir)))
+            ParquetIO.writePartFile(out.resolve(name), rows, hadoopConf)
+          }
+        }
+      })
+    }.foreach(_.get()) // propagate any read or write failure
+    finally pool.shutdown()
+  }
+
+  /** [[compact]]'s large (and `zorder`) branch: ONE Spark job over every
+    * eligible file — not a driver loop of per-directory jobs, which would
+    * cost O(partitions) scheduling rounds at scale.
+    */
+  private def compactSpark(files: Seq[Path], applyLww: Boolean, zorder: Boolean,
+      zorderRowsPerFile: Long, stage: Path): Unit = {
     val withPartCols = dataFileSchema
       .add(StructField("tag", StringType, nullable = false))
       .add(StructField("partition_start", LongType, nullable = false))
@@ -2484,7 +2551,7 @@ final class TimeSeriesStore(
     // subset of partition files.
     val raw = spark.read.option("basePath", hotDir.toString)
       .schema(withPartCols)
-      .parquet(eligible.flatMap(_._2).map(_.toString): _*)
+      .parquet(files.map(_.toString): _*)
     val merged =
       if (!applyLww) raw
       else {
@@ -2511,21 +2578,11 @@ final class TimeSeriesStore(
         // the key exists only to place rows; the rewritten files must be
         // schema-identical to the originals (projection preserves order)
         .drop("__zkey")
-    // Publish-then-retire (Spark part names are write-unique). LWW can
-    // never empty a partition (≥1 member per ts survives), so every
-    // eligible dir has a rewritten counterpart and all its old files retire.
-    val n = publish(hotDir, RewritePrefix, eligible.flatMap(_._2)) { stage =>
-      writer
-        .write.mode("overwrite").partitionBy("tag", "partition_start")
-        .option("maxRecordsPerFile",
-          if (zorder) zorderRowsPerFile else 0L)
-        .parquet(stage.toString)
-      eligible.count { case (dir, _) => Files.exists(stage.resolve(hotDir.relativize(dir))) }
-    }
-    partSizesFresh = false // partitions were rewritten
-    bumpVersion()
-    n
-    }
+    writer
+      .write.mode("overwrite").partitionBy("tag", "partition_start")
+      .option("maxRecordsPerFile",
+        if (zorder) zorderRowsPerFile else 0L)
+      .parquet(stage.toString)
   }
 
   /** Cheap, LOCK-FREE fragmentation pre-check for periodic maintenance
@@ -2568,16 +2625,7 @@ final class TimeSeriesStore(
         catch { case _: NumberFormatException => true }
       })
     if (gcDue) return true
-    if (!Files.exists(hotDir)) return false
-    val pending = pendingObsolete()
-    withWalk(hotDir, 2)(_
-      .filter(p => Files.isDirectory(p) &&
-        p.getFileName.toString.startsWith("partition_start="))
-      .exists { d =>
-        withList(d)(_.count(p =>
-          p.getFileName.toString.endsWith(".parquet") &&
-            !pending.contains(p.toAbsolutePath.normalize)) >= minFiles)
-      })
+    hotPartitionFiles(pendingObsolete()).exists(_._2.size >= minFiles)
   }
 
   // ---------------------------------------------------- targeted delete
@@ -2617,6 +2665,7 @@ final class TimeSeriesStore(
     gcSweep() // retire grace-expired files before re-listing partitions
     flushL0() // deletion operates on the partitioned tiers
     val width = settings.partitionWidth
+    val pending = pendingObsolete()
     val affected: Seq[(Path, Seq[Path])] =
       Seq(hotDir, coldDir).filter(Files.exists(_)).flatMap { tier =>
         val tagDir = tier.resolve(tagDirName(tag))
@@ -2629,7 +2678,7 @@ final class TimeSeriesStore(
             val ps = d.getFileName.toString.stripPrefix("partition_start=").toLong
             ps <= toTs && ps + width - 1 >= fromTs
           }
-          .map(d => d -> liveParquetFiles(d))
+          .map(d => d -> liveParquetFiles(d, pending))
           .filter(_._2.nonEmpty)
       }
     if (affected.isEmpty) return 0L
