@@ -7,7 +7,6 @@ import java.util
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -279,7 +278,10 @@ final class StoreTailStream(nsRoot: String, checkpointLocation: String,
       finally s.close()
     }
 
-  private def hotFilesOf(pd: Path, tagDirName: String, pdName: String,
+  /** `pd`'s tailable files as `hot/<rel>/<file>`, `rel` its
+    * [[graft.tsdb.PartitionDir]] path.
+    */
+  private def hotFilesOf(pd: Path, rel: String,
       into: scala.collection.mutable.TreeSet[String]): Unit = {
     if (!Files.isDirectory(pd)) return
     val s = Files.list(pd)
@@ -287,7 +289,7 @@ final class StoreTailStream(nsRoot: String, checkpointLocation: String,
       val n = p.getFileName.toString
       if (n.endsWith(".parquet") && !n.startsWith(".") &&
           !n.startsWith(graft.tsdb.Limits.RewritePrefix)) {
-        into += s"hot/$tagDirName/$pdName/$n"; ()
+        into += s"hot/$rel/$n"; ()
       }
     } finally s.close()
   }
@@ -319,8 +321,7 @@ final class StoreTailStream(nsRoot: String, checkpointLocation: String,
       knownHot = scala.collection.mutable.TreeSet.empty[String]
       subDirs(hot, "tag=").foreach { tagDir =>
         subDirs(tagDir, "partition_start=").foreach { pd =>
-          hotFilesOf(pd, tagDir.getFileName.toString,
-            pd.getFileName.toString, knownHot)
+          hotFilesOf(pd, s"${tagDir.getFileName}/${pd.getFileName}", knownHot)
         }
       }
     } else {
@@ -328,10 +329,8 @@ final class StoreTailStream(nsRoot: String, checkpointLocation: String,
         .readAppended(root.resolve("activity"), actOffsets)
       actOffsets = newOffsets
       touched.foreach { case (tag, ps) =>
-        val tagDirName = "tag=" + ExternalCatalogUtils.escapePathName(tag)
-        val pdName = s"partition_start=$ps"
-        hotFilesOf(hot.resolve(tagDirName).resolve(pdName),
-          tagDirName, pdName, knownHot)
+        val rel = graft.tsdb.PartitionDir(tag, ps)
+        hotFilesOf(hot.resolve(rel), rel, knownHot)
       }
     }
     val out = (l0Listing() ++ knownHot).sorted
@@ -482,10 +481,8 @@ final class StoreTailStream(nsRoot: String, checkpointLocation: String,
     if (rel.startsWith("l0/")) TailFile(rel, l0 = true, tag = "", pStart = 0L)
     else {
       // hot/tag=<T>/partition_start=<P>/<file>
-      val segs = rel.split('/')
-      val tag = ExternalCatalogUtils.unescapePathName(
-        segs(1).stripPrefix("tag="))
-      val ps = segs(2).stripPrefix("partition_start=").toLong
+      val (tag, ps) = graft.tsdb.PartitionDir.keyOf(Paths.get(rel).getParent).getOrElse(
+        throw new IllegalStateException(s"not a partition file: $rel"))
       TailFile(rel, l0 = false, tag = tag, pStart = ps)
     }
 

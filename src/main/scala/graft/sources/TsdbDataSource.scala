@@ -13,7 +13,6 @@ import org.apache.parquet.hadoop.ParquetReader
 import org.apache.parquet.hadoop.api.ReadSupport
 import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -495,13 +494,11 @@ final class TsdbScan(
     var total = 0
     tierNames.foreach { tn =>
       subDirs(Paths.get(nsRoot, tn), "tag=").foreach { tagDir =>
-        val tag = ExternalCatalogUtils.unescapePathName(
-          tagDir.getFileName.toString.stripPrefix("tag="))
-        val tagOk = tags.forall(_.contains(tag))
         subDirs(tagDir, "partition_start=").foreach { pd =>
           total += 1
-          val ps = pd.getFileName.toString.stripPrefix("partition_start=").toLong
-          if (tagOk && ps >= psLo && ps <= psHi && psIn.forall(_.contains(ps))) {
+          for ((tag, ps) <- graft.tsdb.PartitionDir.keyOf(pd)
+              if tags.forall(_.contains(tag)) && ps >= psLo && ps <= psHi &&
+                psIn.forall(_.contains(ps))) {
             val s = Files.list(pd)
             val files =
               try s.iterator().asScala.filter(keepFile).map(_.toString).toArray
@@ -1259,8 +1256,7 @@ final class TsdbDataWriter(
       s"graft-tsdb write: partition_start $claimed does not match " +
         s"ts $ts under width $width (expected $ps)")
     val (w, _, meta) = open.getOrElseUpdate((tag, ps), {
-      val destRel = "tag=" + ExternalCatalogUtils.escapePathName(tag) +
-        s"/partition_start=$ps"
+      val destRel = graft.tsdb.PartitionDir(tag, ps)
       val dir = taskDir.resolve(destRel)
       Files.createDirectories(dir)
       val fname = s"part-$partitionId-$taskId-${open.size}.parquet"

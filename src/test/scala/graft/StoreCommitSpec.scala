@@ -191,4 +191,77 @@ class StoreCommitSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     assert("\\.tmp\\b".r.findFirstIn(code).isEmpty, "a `.tmp` name is built")
   }
+
+  test("a tag this JVM cannot name a directory for is refused before it reaches l0/") {
+    val tag = "\uD834\uDD1Eq" // U+1D11E, then q
+    val encodable =
+      try { Paths.get("tag=" + tag); true }
+      catch { case _: java.nio.file.InvalidPathException => false }
+    val r = new Run(0L, Limits.DirectFlushMaxBytes)
+    import r._
+    write(Map("plain" -> Map(1L -> "p1")))
+    if (encodable) {
+      write(Map(tag -> Map(2L -> "x2"), "plain" -> Map(3L -> "p3")))
+      assert(st.flushL0() === 2)
+      assert(read() === model)
+    } else {
+      val l0 = Paths.get(st.namespaceRoot, "l0")
+      val before = walk(l0).sorted
+      val e = intercept[IllegalArgumentException] {
+        st.write(Map(tag -> Map(2L -> "x2"), "plain" -> Map(3L -> "p3")))
+      }
+      assert(e.getMessage.contains(tag))
+      assert(walk(l0).sorted === before, "the refused batch reached l0/")
+      assert(st.flushL0() === 1)
+      write(Map("plain" -> Map(4L -> "p4")))
+      assert(st.compact() === 1)
+      now += 120000L
+      assert(st.purgeScan(60, 10).size === 1)
+      assert(read() === model)
+    }
+    assert(leftovers(st) === Nil)
+  }
+
+  test("one partition-rewrite step: one pool, one size rule, one Spark reader schema, one rewrite writer") {
+    val src = Paths.get("src", "main", "scala", "graft", "tsdb", "TimeSeriesStore.scala")
+    assert(Files.isRegularFile(src), s"run from the repository root (no $src)")
+    val code = new String(Files.readAllBytes(src), "UTF-8")
+      .replaceAll("(?s)(?<!\")/\\*.*?\\*/", "")
+      .replaceAll("//[^\n]*", "")
+    def all(s: String): Seq[Int] =
+      Iterator.iterate(code.indexOf(s))(i => code.indexOf(s, i + 1)).takeWhile(_ >= 0).toSeq
+    /** [start, end) of the body of the method declared at `head`. */
+    def bodyOf(head: String): (Int, Int) = {
+      val at = code.indexOf(head)
+      assert(at >= 0, s"$head is gone")
+      val open = code.indexOf('{', at)
+      var end = open + 1
+      var depth = 1
+      while (depth > 0) {
+        code.charAt(end) match {
+          case '{' => depth += 1
+          case '}' => depth -= 1
+          case _ => ()
+        }
+        end += 1
+      }
+      (open, end)
+    }
+    val step = bodyOf("private def rewrite(")
+    def inStep(i: Int): Boolean = i > step._1 && i < step._2
+    val pools = all("newFixedThreadPool")
+    assert(pools.size === 1, "one driver-side pool")
+    assert(pools.forall(inStep), "the pool lives in the rewrite step")
+    val rules = "[<>]=?\\s*directFlushMaxBytes|directFlushMaxBytes\\s*[<>]".r
+      .findAllMatchIn(code).map(_.start).toSeq
+    assert(rules.size === 1, "one comparison against directFlushMaxBytes")
+    assert(rules.forall(inStep), "the size rule lives in the rewrite step")
+    assert("val\\s+withPartCols\\b".r.findAllMatchIn(code).size === 1, "one withPartCols")
+    val writers = all("partitionBy(\"tag\", \"partition_start\")")
+    val bulk = bodyOf("def writeSamplesDistributed(")
+    assert(writers.size === 2, "the rewrite step's writer and writeSamplesDistributed's")
+    assert(writers.count(inStep) === 1)
+    assert(writers.count(i => i > bulk._1 && i < bulk._2) === 1)
+    for (gone <- Seq("compactLocal", "compactSpark")) assert(!code.contains(gone), gone)
+  }
 }

@@ -337,4 +337,97 @@ class JoblessMaintenanceSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(leftovers(st).isEmpty)
     assert(entries.map(_.data.size).sum === 10)
   }
+
+  // ------------------------------------------------------------ delete
+
+  /** Every physical row of one tier, sorted (empty when it holds none). */
+  private def tierRows(st: TimeSeriesStore, tier: String): Seq[(String, Long, Long, String, Long, String, Long)] = {
+    val dir = Paths.get(st.namespaceRoot, tier)
+    if (!walk(dir).exists(_.getFileName.toString.endsWith(".parquet"))) Nil
+    else spark.read.parquet(dir.toString)
+      .select(col("tag"), col("partition_start").cast("long"), col("ts"), col("value"),
+        col("ingestTs"), col("writerId"), col("seq"))
+      .collect().toSeq
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getString(3),
+        r.getLong(4), r.getString(5), r.getLong(6)))
+      .sorted
+  }
+
+  /** Two tags over four partitions in BOTH tiers, with superseded
+    * duplicates inside each tier and across them: three overlapping
+    * rounds, everything archived to cold, then two more overlapping rounds
+    * into hot.
+    */
+  private def tieredHistory(directMax: Long): TimeSeriesStore = {
+    var now = 1000000L
+    val st = new TimeSeriesStore(spark,
+      Files.createTempDirectory("graft-delete-branch").toString,
+      StoreSettings(partitionWidth = 10L), directFlushMaxBytes = directMax)
+    st.clock = () => now
+    st.initialize()
+    var seq = 0L
+    // a fixed writer id, so the two stores' physical rows can be compared
+    def round(name: String, step: Long, upTo: Long): Unit = {
+      st.writeSamples(for {
+        t <- Seq("D1", "sp ace:/d")
+        ts <- 0L until upTo by step
+      } yield { seq += 1; Sample(t, ts, s"$t-$name-$ts", now, "w", seq) })
+      st.flushL0()
+      now += 10L
+    }
+    round("c0", 1L, 40L)
+    round("c1", 2L, 40L)
+    round("c2", 3L, 40L)
+    now += 120000L
+    st.purgeScan(60L, 100).foreach { id =>
+      val e = st.loadPurgeEntry(id).get
+      st.archiveToCold(id)
+      assert(st.purgeAck(id, e.partitionName, e.tag) === 1)
+    }
+    round("h0", 3L, 30L)
+    round("h1", 6L, 30L)
+    st
+  }
+
+  test("delete: the driver-side and the Spark half yield the same store") {
+    val deletes = Seq(("D1", 0L, 9L), ("D1", 12L, 25L), ("sp ace:/d", 35L, 39L),
+      ("sp ace:/d", 3L, 3L), ("sp ace:/d", 100L, 200L))
+    val ranges = Seq("D1", "sp ace:/d").map(_ -> (-100L, 100L)).toMap
+    val outs = Seq(Limits.DirectFlushMaxBytes, 0L).map { directMax =>
+      val st = tieredHistory(directMax)
+      assert(tierRows(st, "hot").nonEmpty && tierRows(st, "cold").nonEmpty)
+      val counts = deletes.map { case (tag, from, to) =>
+        val physical = (tierRows(st, "hot") ++ tierRows(st, "cold"))
+          .count(r => r._1 == tag && r._3 >= from && r._3 <= to)
+        val (n, jobs) = sparkJobsDuring(st.delete(tag, from, to))
+        assert(n === physical.toLong, s"directMax=$directMax delete($tag, $from, $to)")
+        if (directMax > 0L) assert(jobs === 0, s"delete($tag, $from, $to) started $jobs Spark jobs")
+        n
+      }
+      assert(leftovers(st).isEmpty, s"directMax=$directMax: ${leftovers(st)}")
+      (counts, st.readData(ranges), tierRows(st, "hot"), tierRows(st, "cold"))
+    }
+    val (local, distributed) = (outs(0), outs(1))
+    assert(local._1 === distributed._1, "return counts")
+    assert(local._1.take(2).forall(_ > 0L) && local._1.last === 0L)
+    assert(local._2 === distributed._2, "readData")
+    assert(local._3 === distributed._3, "physical hot rows")
+    assert(local._4 === distributed._4, "physical cold rows")
+    assert(local._2("D1").keys.forall(ts => ts >= 10L && !(ts >= 12L && ts <= 25L)))
+  }
+
+  test("guard: a small delete starts no Spark job") {
+    val st = new TimeSeriesStore(spark,
+      Files.createTempDirectory("graft-delete-jobless").toString, StoreSettings(partitionWidth = 10L))
+    st.initialize()
+    st.write(Map("G" -> (0L until 30L).map(ts => ts -> s"v$ts").toMap))
+    st.write(Map("G" -> Map(5L -> "v5'", 15L -> "v15'")))
+    st.flushL0()
+    val (n, jobs) = sparkJobsDuring(st.delete("G", 5L, 15L))
+    assert(n === 13L, "11 timestamps plus the 2 superseded members")
+    assert(jobs === 0, s"delete started $jobs Spark jobs")
+    assert(st.readData(Map("G" -> (0L, 100L)))("G").keys.toSeq ===
+      ((0L until 5L) ++ (16L until 30L)))
+    assert(leftovers(st).isEmpty)
+  }
 }
