@@ -14,12 +14,12 @@ import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
   * reads `%XX` back as one char ≤ 0xFF), so a JVM whose file-name encoding
   * cannot hold them cannot name the directory: see [[requireEncodable]].
   */
-object PartitionDir {
+private[graft] object PartitionDir {
 
   private val StartPrefix = "partition_start="
 
   /** A tag's directory name, `tag=<escaped tag>`. */
-  def tagDir(tag: String): String = "tag=" + ExternalCatalogUtils.escapePathName(tag)
+  private[tsdb] def tagDir(tag: String): String = "tag=" + ExternalCatalogUtils.escapePathName(tag)
 
   /** A partition's directory, `tag=<escaped tag>/partition_start=<n>`,
     * relative to its tier root.
@@ -28,7 +28,7 @@ object PartitionDir {
     s"${tagDir(tag)}/$StartPrefix$partitionStart"
 
   /** The partition start a `partition_start=<n>` directory name encodes. */
-  def startOf(name: String): Option[Long] =
+  private[tsdb] def startOf(name: String): Option[Long] =
     if (!name.startsWith(StartPrefix)) None
     else try Some(name.substring(StartPrefix.length).toLong)
     catch { case _: NumberFormatException => None }
@@ -49,7 +49,7 @@ object PartitionDir {
     * tag's directory (the store would take its rows into `l0/`, then fail
     * every flush).
     */
-  def requireEncodable(tag: String): Unit =
+  private[tsdb] def requireEncodable(tag: String): Unit =
     // an ASCII tag escapes to printable ASCII, which every encoding holds
     if (!tag.forall(_ < 0x80)) try { Paths.get(tagDir(tag)); () }
     catch {

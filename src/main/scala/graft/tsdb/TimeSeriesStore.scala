@@ -81,10 +81,10 @@ final case class PurgeEntry(
   *
   * Flush, compaction, purge ack and delete all rewrite partitions through
   * one step (the private `rewrite`): it reads some files, computes each
-  * output partition's rows and writes one new file per partition, then
-  * publishes them. Up to `directFlushMaxBytes` of input it runs on a
-  * small driver-side pool with no Spark job; above that it runs as one
-  * Spark job.
+  * output partition's rows and writes them as new files, then publishes
+  * them. Flush, compaction and purge ack run it on a small driver-side
+  * pool with no Spark job up to `directFlushMaxBytes` of input; above
+  * that, and always for delete and zorder compaction, it is one Spark job.
   *
   * Scale notes (100 TB target): the analytical query paths are single
   * declarative DataFrame plans; the driver-side work is bounded by the
@@ -97,7 +97,7 @@ final class TimeSeriesStore(
     val rootDir: String,
     val settings: StoreSettings = StoreSettings(),
     /** Input bytes at or below which a partition rewrite (flush, compact,
-      * purge ack, delete) runs driver-side; above it the rewrite is a
+      * purge ack) runs driver-side; above it the rewrite is a
       * Spark job. Overridable so tests can exercise the Spark half without
       * generating 128 MiB.
       */
@@ -275,13 +275,12 @@ final class TimeSeriesStore(
   private val dataFileSchema = StructType(
     sampleSchema.filterNot(f => f.name == "tag"))
 
-  /** Columns of tier files read through Spark: the file columns plus the
-    * partition columns, which `basePath` recovers from the directories
-    * (L0 files hold them physically).
+  /** The one Spark read schema of store files, L0 and both tiers: the
+    * sample columns plus `partition_start`. L0 files hold every column
+    * physically; in a tier `tag`/`partition_start` come back from the
+    * directories through `basePath`.
     */
-  private val withPartCols = dataFileSchema
-    .add(StructField("tag", StringType, nullable = false))
-    .add(StructField("partition_start", LongType, nullable = false))
+  private val withPartCols = sampleSchema.add("partition_start", LongType)
 
   /** One row of a partition data file: (ts, value, ingestTs, writerId, seq). */
   private type PartRow = (Long, String, Long, String, Long)
@@ -607,8 +606,6 @@ final class TimeSeriesStore(
     // copies under plain names would emit every row twice. The L0
     // originals retire through the grace ledger once the copies are live,
     // so a foreign reader's stale listing never hits a vanished file.
-    // L0 files hold tag and partition_start physically, so the Spark half
-    // needs no transformation.
     rewrite(hotDir, files, Some { () =>
       val groups = scala.collection.mutable.HashMap
         .empty[(String, Long), scala.collection.mutable.ArrayBuffer[PartRow]]
@@ -621,7 +618,8 @@ final class TimeSeriesStore(
       groups.toSeq.map { case ((tag, pStart), rows) =>
         hotDir.resolve(PartitionDir(tag, pStart)) -> (() => rows.toSeq)
       }
-    }, identity)
+    }, (l0, stage) =>
+      writePartitioned(l0.repartition(col("tag"), col("partition_start")), stage))
     files.foreach(f => l0Meta.remove(f.getFileName.toString))
     partSizesFresh = false // L1 grew by an unknown per-partition split
     bumpVersion()
@@ -902,7 +900,7 @@ final class TimeSeriesStore(
     verifySnapshotFiles(l0Files, retiredAt)
     val withL0 =
       if (l0Files.isEmpty) base
-      else base.unionByName(spark.read.schema(l0SparkSchema)
+      else base.unionByName(spark.read.schema(withPartCols)
         .parquet(l0Files.map(_.toString): _*))
     withL0.where(col("ingestTs") <= asOfMs)
   }
@@ -1163,13 +1161,13 @@ final class TimeSeriesStore(
       hotFiles: Seq[Path], coldFiles: Seq[Path]): DataFrame = {
     val l0 =
       if (l0Files.isEmpty) None
-      else Some(spark.read.schema(l0SparkSchema)
+      else Some(spark.read.schema(withPartCols)
         .parquet(l0Files.map(_.toString): _*))
     def tierSnap(dir: Path, fs: Seq[Path]): Option[DataFrame] =
       if (fs.isEmpty) None
       else Some(spark.read
         .option("basePath", dir.toString)
-        .schema(sampleSchema.add("partition_start", LongType))
+        .schema(withPartCols)
         .parquet(fs.map(_.toString): _*))
     (Seq(l0, tierSnap(hotDir, hotFiles), tierSnap(coldDir, coldFiles)).flatten match {
       case Nil => emptySamples
@@ -1559,11 +1557,7 @@ final class TimeSeriesStore(
   }
 
   private def emptySamples: DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      sampleSchema.add("partition_start", LongType))
-
-  /** Spark read schema for L0 batch files (all columns physical). */
-  private def l0SparkSchema: StructType = sampleSchema.add("partition_start", LongType)
+    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], withPartCols)
 
   /** L0 tier as a DataFrame (None when empty). Column-order-normalized to
     * match the Hive-tier view for `unionByName`.
@@ -1571,7 +1565,7 @@ final class TimeSeriesStore(
   private def l0TierDF(): Option[DataFrame] = {
     val files = l0FileList()
     if (files.isEmpty) None
-    else Some(spark.read.schema(l0SparkSchema).parquet(files.map(_.toString): _*))
+    else Some(spark.read.schema(withPartCols).parquet(files.map(_.toString): _*))
   }
 
   private def tierDF(dir: Path): DataFrame =
@@ -1593,7 +1587,7 @@ final class TimeSeriesStore(
       else Some {
         spark.read
           .option("basePath", dir.toString)
-          .schema(sampleSchema.add("partition_start", LongType))
+          .schema(withPartCols)
           .parquet(dir.toString)
       }
     } else {
@@ -1608,7 +1602,7 @@ final class TimeSeriesStore(
       else Some {
         spark.read
           .option("basePath", dir.toString)
-          .schema(sampleSchema.add("partition_start", LongType))
+          .schema(withPartCols)
           .parquet(live.map(_.toString): _*)
       }
     }
@@ -2294,12 +2288,22 @@ final class TimeSeriesStore(
           }
         }
         remaining.toSeq
-      })), { current =>
+      })), { (current, stage) =>
         val snap = spark.read.schema(dataFileSchema).parquet(snapshot.toString)
           .select(col("writerId").as("s_writerId"), col("seq").as("s_seq"))
-        current.join(broadcast(snap),
+        val remaining = current.join(broadcast(snap),
           current("writerId") === col("s_writerId") && current("seq") === col("s_seq"),
           "left_anti")
+        // this half runs precisely when the partition is OVERSIZED, so
+        // the write stays executor-parallel — several files in one dir
+        // are fine (compact() merges them later); a shuffle on the one
+        // partition key would funnel it through one task
+        if (remaining.isEmpty) 0
+        else {
+          remaining.drop("tag", "partition_start").write.mode("append")
+            .parquet(stage.toString)
+          1
+        }
       })
     }
     Files.write(entryDir.resolve("acked"), Array.emptyByteArray)
@@ -2401,17 +2405,35 @@ final class TimeSeriesStore(
           }
         }
       }),
-      raw =>
-        if (!applyLww) raw
+      { (raw, stage) =>
+        val merged =
+          if (!applyLww) raw
+          else {
+            // latest (ingestTs, seq, writerId) member per ts wins — the
+            // within-partition LSM merge, mergeRead's ordering
+            val w = Window.partitionBy(col("tag"), col("partition_start"), col("ts"))
+              .orderBy(col("ingestTs").desc, col("seq").desc, col("writerId").desc)
+            raw.withColumn("__rn", row_number().over(w))
+              .where(col("__rn") === 1).drop("__rn")
+          }
+        val clustered = merged.repartition(col("tag"), col("partition_start"))
+        if (!zorder) writePartitioned(clustered, stage)
         else {
-          // latest (ingestTs, seq, writerId) member per ts wins — the
-          // within-partition LSM merge, mergeRead's ordering
-          val w = Window.partitionBy(col("tag"), col("partition_start"), col("ts"))
-            .orderBy(col("ingestTs").desc, col("seq").desc, col("writerId").desc)
-          raw.withColumn("__rn", row_number().over(w))
-            .where(col("__rn") === 1).drop("__rn")
-        },
-      Option.when(zorder)(zorderRowsPerFile))
+          // each row's Morton key over (16-bit tag hash, fine ts min-max
+          // normalized onto its partition window) orders the rows within
+          // the task, so with the file roll every output file owns a
+          // CONTIGUOUS key range; the key only places rows — rewritten
+          // files stay schema-identical to the originals
+          val zsorted = clustered
+            .withColumn("__zkey", graft.analytics.Layout.zorderKey(
+              pmod(xxhash64(col("tag")), lit(65536L)),
+              least(lit(65535L), expr("(ts - partition_start) * 65535 div " +
+                s"greatest(${settings.partitionWidth}L - 1, 1)"))))
+            .sortWithinPartitions(col("tag"), col("partition_start"), col("__zkey"))
+            .drop("__zkey")
+          writePartitioned(zsorted, stage, zorderRowsPerFile)
+        }
+      })
     partSizesFresh = false // partitions were rewritten
     bumpVersion()
     n
@@ -2420,7 +2442,7 @@ final class TimeSeriesStore(
 
   /** The store's one partition rewrite — flush, compaction, purge ack and
     * delete each read some files, compute each output partition's rows and
-    * write one new file per partition (an LSM merge), published by one
+    * write them as new files (an LSM merge), published by one
     * `publish(tier, RewritePrefix, files)`: the outputs go live under
     * `tier`, then the `files` read retire.
     *
@@ -2429,23 +2451,15 @@ final class TimeSeriesStore(
     * partitions (live directory, rows), and a pool of at most 8 threads
     * writes each as one `part-<staging>.parquet` into the staging mirror of
     * its directory — a Spark job would cost seconds of scheduling for
-    * kilobytes. Otherwise one Spark job runs `distributed` over the files
-    * read with their partition columns and writes each partition from one
-    * task, one file per partition dir (what makes compaction converge).
-    * When `tier` is itself one partition directory (a purge ack) that
-    * partition is over the size rule, so its write stays executor-parallel:
-    * a shuffle on its one key would funnel it through one task, and several
-    * files in one dir are fine (compaction merges them later).
+    * kilobytes. Otherwise `distributed` gets the files read with their
+    * partition columns and the staging directory, writes its output there
+    * in the shape it needs, and returns the number of partitions written.
     *
-    * @param zorderRowsPerFile z-cluster each partition's rows and roll the
-    *   writer at this many rows (Spark only; see [[compact]])
     * @return the number of partitions that received a file
     */
   private def rewrite(tier: Path, files: Seq[Path],
       local: Option[() => Seq[(Path, () => Seq[PartRow])]],
-      distributed: DataFrame => DataFrame,
-      zorderRowsPerFile: Option[Long] = None): Int = {
-    val flat = PartitionDir.keyOf(tier).isDefined
+      distributed: (DataFrame, Path) => Int): Int =
     publish(tier, RewritePrefix, files) { stage =>
       local.filter(_ => files.map(sizeOrZero).sum <= directFlushMaxBytes) match {
         case Some(parts) =>
@@ -2458,8 +2472,10 @@ final class TimeSeriesStore(
                 val out = rows()
                 if (out.isEmpty) 0
                 else {
-                  val into = if (flat) stage
-                    else Files.createDirectories(stage.resolve(tier.relativize(dir)))
+                  // `tier` may itself be the partition (a purge ack): the
+                  // staging directory already exists
+                  val into = stage.resolve(tier.relativize(dir))
+                  if (into != stage) Files.createDirectories(into)
                   ParquetIO.writePartFile(into.resolve(name), out, hadoopConf)
                   1
                 }
@@ -2470,36 +2486,25 @@ final class TimeSeriesStore(
         case None =>
           val dir = files.head.getParent
           val base = if (PartitionDir.keyOf(dir).isDefined) dir.getParent.getParent else dir
-          val out = distributed(spark.read.option("basePath", base.toString)
+          distributed(spark.read.option("basePath", base.toString)
             .schema(withPartCols)
-            .parquet(files.map(_.toString): _*))
-          if (flat) {
-            if (out.isEmpty) 0
-            else {
-              out.drop("tag", "partition_start").write.mode("append").parquet(stage.toString)
-              1
-            }
-          } else {
-            val clustered = out.repartition(col("tag"), col("partition_start"))
-            // zorder: each row's Morton key over (16-bit tag hash, fine ts
-            // min-max normalized onto its partition window) orders the rows
-            // within the task, so with the file roll every output file owns
-            // a CONTIGUOUS key range; the key only places rows — rewritten
-            // files stay schema-identical to the originals
-            zorderRowsPerFile.fold(clustered)(_ => clustered
-              .withColumn("__zkey", graft.analytics.Layout.zorderKey(
-                pmod(xxhash64(col("tag")), lit(65536L)),
-                least(lit(65535L), expr("(ts - partition_start) * 65535 div " +
-                  s"greatest(${settings.partitionWidth}L - 1, 1)"))))
-              .sortWithinPartitions(col("tag"), col("partition_start"), col("__zkey"))
-              .drop("__zkey"))
-              .write.mode("overwrite").partitionBy("tag", "partition_start")
-              .option("maxRecordsPerFile", zorderRowsPerFile.getOrElse(0L))
-              .parquet(stage.toString)
-            withWalk(stage, 2)(_.count(p => PartitionDir.keyOf(p).isDefined))
-          }
+            .parquet(files.map(_.toString): _*), stage)
       }
     }
+
+  /** The Spark half's layout writer: `clustered` (one task per output
+    * partition, so one file per partition dir — what makes compaction
+    * converge) goes into `stage` as a `tag=…/partition_start=…` tree,
+    * rolling files at `maxRecordsPerFile` rows when it is positive.
+    *
+    * @return the number of partition directories written
+    */
+  private def writePartitioned(clustered: DataFrame, stage: Path,
+      maxRecordsPerFile: Long = 0L): Int = {
+    clustered.write.mode("overwrite").partitionBy("tag", "partition_start")
+      .option("maxRecordsPerFile", maxRecordsPerFile)
+      .parquet(stage.toString)
+    withWalk(stage, 2)(_.count(p => PartitionDir.keyOf(p).isDefined))
   }
 
   /** Cheap, LOCK-FREE fragmentation pre-check for periodic maintenance
@@ -2554,12 +2559,10 @@ final class TimeSeriesStore(
     *    intersects `[fromTs, toTs]` are touched (partition pruning makes
     *    a targeted delete cost O(affected partitions), never a tier
     *    rescan — the Delta/Iceberg DELETE file-pruning shape);
-    *  - the partition-rewrite step filters the doomed rows out of the
-    *    affected files of BOTH tiers (hot and cold share the layout, and
-    *    a forget that skipped the archive would not be a forget), once
-    *    per tier: on the driver pool up to `directFlushMaxBytes` of
-    *    affected files (a small delete starts no Spark job), else in one
-    *    Spark job;
+    *  - the partition-rewrite step's Spark half filters the doomed rows
+    *    out of the affected files of BOTH tiers (hot and cold share the
+    *    layout, and a forget that skipped the archive would not be a
+    *    forget), one job per tier;
     *  - surviving rows publish next to the old files (write-unique
     *    names, atomic moves) before the superseded files retire through
     *    the same grace ledger — a concurrent reader in any process sees
@@ -2591,35 +2594,25 @@ final class TimeSeriesStore(
           .filter(_._2.nonEmpty)
       }
     if (affected.isEmpty) return 0L
+    val doomed = col("ts").between(fromTs, toTs)
     // the count of PHYSICAL rows removed, superseded duplicates included
-    val deleted = new AtomicLong(0L)
-    // a fully-doomed partition has no rewritten counterpart: retiring its
+    var deleted = 0L
+    // hot and cold rewrite separately (their outputs land in different
+    // tier roots) but each is one job over its affected files only; a
+    // fully-doomed partition has no rewritten counterpart: retiring its
     // old files IS the delete
     Seq(hotDir, coldDir).foreach { tier =>
       val tierAffected = affected.filter(_._1.startsWith(tier))
       if (tierAffected.nonEmpty)
-        rewrite(tier, tierAffected.flatMap(_._2), Some(() => tierAffected.map { case (dir, files) =>
-          dir -> { () =>
-            val kept = scala.collection.mutable.ArrayBuffer.empty[PartRow]
-            var dropped = 0L
-            files.foreach(f => ParquetIO.foreachSample(f, Some(tag), hadoopConf,
-              cached = false) { (_, ts, v, ingestTs, wId, seq) =>
-              if (ts >= fromTs && ts <= toTs) dropped += 1
-              else kept += ((ts, v, ingestTs, wId, seq))
-              ()
-            })
-            deleted.addAndGet(dropped)
-            kept.toSeq
-          }
-        }), { raw =>
-          val doomed = col("ts").between(fromTs, toTs)
-          deleted.addAndGet(raw.where(doomed).count())
-          raw.where(!doomed)
+        rewrite(tier, tierAffected.flatMap(_._2), None, { (raw, stage) =>
+          deleted += raw.where(doomed).count()
+          writePartitioned(raw.where(!doomed)
+            .repartition(col("tag"), col("partition_start")), stage)
         })
     }
     partSizesFresh = false
     bumpVersion()
-    deleted.get
+    deleted
     }
   }
 }
@@ -2694,7 +2687,7 @@ final class ChangeWindowOverBudgetException(msg: String)
 object GcLedger {
 
   /** The ledger's entries (empty when `gcDir` does not exist). */
-  def entries(gcDir: Path): Seq[Path] =
+  private[tsdb] def entries(gcDir: Path): Seq[Path] =
     if (!Files.exists(gcDir)) Nil
     else {
       val s = Files.list(gcDir)
@@ -2707,7 +2700,7 @@ object GcLedger {
     * name; `Long.MinValue` when it does not parse — "retired before any
     * representable snapshot", the conservative reading.
     */
-  def clockOf(entry: Path): Long =
+  private[tsdb] def clockOf(entry: Path): Long =
     try entry.getFileName.toString.takeWhile(_ != '-').toLong
     catch { case _: NumberFormatException => Long.MinValue }
 
@@ -2715,13 +2708,13 @@ object GcLedger {
     * does not parse is always due (and `now - Long.MinValue` would
     * overflow).
     */
-  def due(entry: Path, now: Long, graceMs: Long): Boolean = {
+  private[tsdb] def due(entry: Path, now: Long, graceMs: Long): Boolean = {
     val at = clockOf(entry)
     at == Long.MinValue || now - at >= graceMs
   }
 
   /** The superseded paths an entry names (none if it vanished mid-read). */
-  def pathsOf(entry: Path): Seq[Path] =
+  private[tsdb] def pathsOf(entry: Path): Seq[Path] =
     try new String(Files.readAllBytes(entry), StandardCharsets.UTF_8)
       .split('\n').toSeq.filter(_.nonEmpty)
       .map(s => Paths.get(s).toAbsolutePath.normalize)

@@ -222,7 +222,7 @@ class StoreCommitSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(leftovers(st) === Nil)
   }
 
-  test("one partition-rewrite step: one pool, one size rule, one Spark reader schema, one rewrite writer") {
+  test("one partition-rewrite step: one pool, one size rule, one Spark read schema, one layout writer") {
     val src = Paths.get("src", "main", "scala", "graft", "tsdb", "TimeSeriesStore.scala")
     assert(Files.isRegularFile(src), s"run from the repository root (no $src)")
     val code = new String(Files.readAllBytes(src), "UTF-8")
@@ -257,10 +257,18 @@ class StoreCommitSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(rules.size === 1, "one comparison against directFlushMaxBytes")
     assert(rules.forall(inStep), "the size rule lives in the rewrite step")
     assert("val\\s+withPartCols\\b".r.findAllMatchIn(code).size === 1, "one withPartCols")
+    // L0, tier and snapshot readers all take that one schema
+    assert(all("sampleSchema.add(").size === 1, "a second store read schema")
+    assert(!code.contains("l0SparkSchema"))
+    // the step picks a half; each caller's Spark function owns its write shape
+    val stepCode = code.substring(step._1, step._2)
+    for (shape <- Seq("partitionBy", "repartition", "zorder", ".write."))
+      assert(!stepCode.contains(shape), s"the rewrite step holds a caller's `$shape`")
     val writers = all("partitionBy(\"tag\", \"partition_start\")")
+    val layout = bodyOf("private def writePartitioned(")
     val bulk = bodyOf("def writeSamplesDistributed(")
-    assert(writers.size === 2, "the rewrite step's writer and writeSamplesDistributed's")
-    assert(writers.count(inStep) === 1)
+    assert(writers.size === 2, "the layout writer's and writeSamplesDistributed's")
+    assert(writers.count(i => i > layout._1 && i < layout._2) === 1)
     assert(writers.count(i => i > bulk._1 && i < bulk._2) === 1)
     for (gone <- Seq("compactLocal", "compactSpark")) assert(!code.contains(gone), gone)
   }

